@@ -38,6 +38,11 @@ def md5_long(col: F.Column, nchars: int = 15) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, nchars), 16, 10).cast("long")
 
 
+def _md5_long_sql(expr: str, nchars: int) -> str:
+    """``md5_long`` as a SQL expression string (same expression tree)."""
+    return f"CAST(conv(substring(md5({expr}), 1, {nchars}), 16, 10) AS BIGINT)"
+
+
 def with_content_hash(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact-dup key: md5 of whitespace-normalized lowercased text."""
     return df.withColumn(
@@ -97,12 +102,27 @@ def with_shingles(
     would otherwise run on one core. At real scale the input already has
     more partitions than cores and this is a no-op.
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    # .rdd is illegal on a streaming frame (streaming minhash path); a
-    # stream's micro-batch parallelism is the source's, so skip the widen.
-    if not df.isStreaming and df.rdd.getNumPartitions() < target:
-        df = df.repartition(target, F.col(id_col))
+    return _shingle_stage(_widen(df, id_col), id_col, text_col, n)
+
+
+def _widen(df: DataFrame, id_col: str, probe: DataFrame | None = None) -> DataFrame:
+    """``df`` hash-repartitioned on ``id_col`` over the cluster's task slots
+    when ``probe`` (default ``df``) has fewer partitions than that.
+
+    Counting partitions costs planning only on a plain scan, but on a frame
+    with an exchange AQE runs the query stages to answer, so callers probe
+    the scan they started from.  ``.rdd`` is illegal on a streaming frame
+    (streaming minhash path); a stream's micro-batch parallelism is the
+    source's, so it is never widened.
+    """
+    probe = df if probe is None else probe
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if probe.isStreaming or probe.rdd.getNumPartitions() >= target:
+        return df
+    return df.repartition(target, F.col(id_col))
+
+
+def _shingle_stage(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     toked = df.select(id_col, tokens(F.lower(F.col(text_col))).alias("_toks"))
     return toked.select(id_col, shingles_of(F.col("_toks"), n).alias("_shingles"))
 
@@ -167,28 +187,19 @@ def minhash_signature(
     (DuckDB oracle parity); the xxhash64 default stays the scale path
     (cheaper hash, same algorithm — both modes share the planted-recall
     unit tests).
+
+    The hash and the ``num_hashes`` minima are SQL strings the JVM parses
+    in one call each: built from ``F.*`` Columns, every node of every
+    minimum was a py4j round trip of its own on every build.
     """
     exploded = _explode_shingles(df, id_col, text_col, shingle_n)
-    sh_hash = (
-        md5_long(F.col("_sh"), 8) if portable else F.xxhash64("_sh")
+    sh_hash = _md5_long_sql("_sh", 8) if portable else "xxhash64(_sh)"
+    hashed = exploded.select(id_col, F.expr(f"pmod({sh_hash}, {_MERSENNE_P}) AS _h"))
+    minima = ", ".join(
+        f"min(pmod(_h * {a} + {b}, {_MERSENNE_P}))"
+        for a, b in _hash_params(num_hashes)
     )
-    hashed = exploded.select(
-        id_col, F.pmod(sh_hash, F.lit(_MERSENNE_P)).alias("_h")
-    )
-    aggs = [
-        F.min(F.pmod(F.col("_h") * F.lit(a) + F.lit(b), F.lit(_MERSENNE_P))).alias(
-            f"_m{i}"
-        )
-        for i, (a, b) in enumerate(_hash_params(num_hashes))
-    ]
-    return (
-        hashed.groupBy(id_col)
-        .agg(*aggs)
-        .select(
-            id_col,
-            F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("signature"),
-        )
-    )
+    return hashed.groupBy(id_col).agg(F.expr(f"array({minima}) AS signature"))
 
 
 def lsh_candidate_pairs(
@@ -224,21 +235,18 @@ def lsh_candidate_pairs(
     # cheaper to compute and a 4x narrower shuffle/join key. A 64-bit (or
     # 60-bit portable) collision only creates a spurious candidate, which
     # the exact-Jaccard verify then rejects.
-    def _bucket(b: int) -> F.Column:
-        cols = [
-            F.col("signature")[b * rows_per_band + r] for r in range(rows_per_band)
-        ]
+    # Built as one SQL string for the same reason as the signature minima.
+    def _bucket(b: int) -> str:
+        cols = [f"signature[{b * rows_per_band + r}]" for r in range(rows_per_band)]
         if portable:
-            return md5_long(F.concat_ws(",", *[c.cast("string") for c in cols]), 15)
-        return F.xxhash64(*cols)
+            joined = ", ".join(f"CAST({c} AS STRING)" for c in cols)
+            return _md5_long_sql(f"concat_ws(',', {joined})", 15)
+        return f"xxhash64({', '.join(cols)})"
 
-    band_structs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), _bucket(b).alias("bucket"))
-            for b in range(bands)
-        ]
+    band_structs = ", ".join(
+        f"struct({b} AS band, {_bucket(b)} AS bucket)" for b in range(bands)
     )
-    buckets = sig.select(id_col, F.explode(band_structs).alias("bb")).select(
+    buckets = sig.select(id_col, F.expr(f"explode(array({band_structs})) AS bb")).select(
         id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
     a = buckets.alias("a")
@@ -302,6 +310,11 @@ def jaccard_verify_counts(
     way). All joins are equi-joins on scalar keys; no arrays cross a
     shuffle."""
     assert threshold > 0.0, "inner-join verify drops jaccard-0 pairs"
+    # Both checkpoints below stay eager although they run Spark jobs on
+    # every build: without them minhash_lsh_pairs builds ~1.2 s faster but
+    # executes as one plan in 5.4-6.7 s, against 0.3-0.4 s after the
+    # checkpoints (sf0.01 fixture, 4 cores).
+    #
     # The candidate DAG (often a full LSH pipeline) is referenced twice
     # below (id semi-join + intersection join) — materialize it once.
     # Candidate pairs are tiny relative to the corpus by construction.
@@ -317,11 +330,11 @@ def jaccard_verify_counts(
     # (Catalyst keeps the written project/join order here since _shingles
     # is referenced above the join).  Then materialize the shingle stage
     # once: it feeds the explode (both pair sides) and the size lookup.
-    # At 100 TB this is persist(DISK_ONLY) or a staged table.
-    cand = df.join(F.broadcast(ids), id_col, "left_semi")
-    sh = with_shingles(cand, id_col=id_col, text_col=text_col, n=shingle_n).localCheckpoint(
-        eager=True
-    )
+    # At 100 TB this is persist(DISK_ONLY) or a staged table.  Whether to
+    # widen is read off the raw input: asking the semi-joined frame would
+    # run its broadcast join under AQE just to count partitions.
+    cand = _widen(df.join(F.broadcast(ids), id_col, "left_semi"), id_col, probe=df)
+    sh = _shingle_stage(cand, id_col, text_col, shingle_n).localCheckpoint(eager=True)
     ex = sh.select(F.col(id_col), F.explode("_shingles").alias("_s"))
     inter = (
         pairs.join(ex.select(F.col(id_col).alias("id_a"), "_s"), "id_a")
@@ -636,13 +649,9 @@ def doc_segments(
     pre-filter, and the trailing partial segment is kept (both engines'
     slice clips at the array end).
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    # .rdd is illegal on a streaming frame (streaming minhash path); a
-    # stream's micro-batch parallelism is the source's, so skip the widen.
-    if not df.isStreaming and df.rdd.getNumPartitions() < target:
-        df = df.repartition(target, F.col(id_col))
-    toked = df.select(id_col, tokens(F.lower(F.col(text_col))).alias("_toks"))
+    toked = _widen(df, id_col).select(
+        id_col, tokens(F.lower(F.col(text_col))).alias("_toks")
+    )
     n_segs = F.ceil(F.size("_toks") / k).cast("int")
     seg_at = lambda i: F.array_join(  # noqa: E731
         F.slice(F.col("_toks"), i * k + 1, k), " "

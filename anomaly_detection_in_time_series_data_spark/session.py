@@ -56,6 +56,13 @@ def get_spark(
     - Arrow on: every pandas_udf / toPandas boundary is vectorized.
     - UTC session timezone: deterministic timestamp semantics vs the
       DuckDB oracle.
+    - DataFrame debugging off (``spark.python.sql.dataFrameDebugging
+      .enabled=false``): PySpark otherwise records the Python call site of
+      every ``F.*``/Column call for error messages, ~5 py4j round trips per
+      call on every query build. The trade: an analysis or runtime error
+      no longer carries the ``== DataFrame ==`` call-site context; the JVM
+      message and the Python traceback remain. PySpark reads the setting
+      once per process, at the first API call made with an active session.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
@@ -70,6 +77,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("ADTS_DRIVER_MEM", "8g"))
     )
     if extra_conf:

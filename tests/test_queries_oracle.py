@@ -7,9 +7,9 @@ Suite wall-time discipline (VERDICT r12 item 2): parametrizing over ALL
 independent gates — the driver's own CORRECTNESS run (50-name window at
 sf0.01) and `tools/check_oracle.py` / `tools/preflight.py` (all oracles,
 run every round and before every commit).  By default this file now
-mirrors the driver's gate exactly: the FIRST-50 registered names (the
-current rotation window).  Set ``ADTS_FULL_ORACLE=1`` for the full sweep
-(preflight covers the same ground without pytest overhead).
+checks the FIRST-50 registered names (the current rotation window) plus
+the batch MinHash-LSH queries.  Set ``ADTS_FULL_ORACLE=1`` for the full
+sweep (preflight covers the same ground without pytest overhead).
 """
 
 from __future__ import annotations
@@ -25,10 +25,16 @@ from anomaly_detection_in_time_series_data_spark.tables import TABLE_NAMES
 
 from conftest import SF_DIR
 
+# Checked on top of the front window: the batch MinHash-LSH queries share
+# the signature/banding/verify code of ``dedup`` with the windowed
+# ``streaming_minhash_candidates`` but sit further down the registry.
+_ALWAYS_CHECKED = ("minhash_lsh_pairs", "minhash_estimate_error")
+
 if os.environ.get("ADTS_FULL_ORACLE"):
     _PARITY_NAMES = sorted(q.ORACLE)
 else:
     _PARITY_NAMES = [n for n in list(q.QUERIES)[:50] if n in q.ORACLE]
+    _PARITY_NAMES += [n for n in _ALWAYS_CHECKED if n not in _PARITY_NAMES]
 
 
 @pytest.fixture(scope="module")
